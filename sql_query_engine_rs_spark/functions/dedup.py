@@ -311,17 +311,6 @@ def _minhash_component_from_digests(digests: Column, slot: int) -> Column:
     return F.array_min(F.transform(digests, lambda h: F.substring(h, slot * 4 + 1, 4)))
 
 
-def minhash_signature(text: Column, num_hashes: int = 8, ngram: int = 3) -> Column:
-    """array<string> MinHash signature over distinct word n-gram shingles of
-    the normalized text (ngram=1 → plain token set)."""
-    shingles = token_ngrams(normalized_text(text), ngram)
-    comps = []
-    for i in range(num_hashes):
-        digests = _minhash_digests(shingles, i // 8)
-        comps.append(_minhash_component_from_digests(digests, i % 8))
-    return F.array(*comps)
-
-
 def _cap_band_size(banded: DataFrame, key: str, max_band_size: int | None) -> DataFrame:
     """Drop band keys whose bucket exceeds ``max_band_size`` rows.
 

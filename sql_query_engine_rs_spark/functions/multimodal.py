@@ -137,20 +137,6 @@ def reset_codec(kind: str | None = None) -> None:
         _CODECS[kind] = _DEFAULT_CODECS[kind]
 
 
-def attach_media_meta(df: DataFrame, payload_col: str, media_type: str, fmt: str) -> DataFrame:
-    """Wrap a binary column with the typed metadata struct (map-only)."""
-    return df.withColumn(
-        "media_meta",
-        F.struct(
-            F.lit(media_type).alias("media_type"),
-            F.lit(fmt).alias("format"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-        ),
-    )
-
-
 def image_features(df: DataFrame, id_col: str = "item_id", payload_col: str = "payload") -> DataFrame:
     """Decode images and emit (dims, byte size, feature vector).
 

@@ -62,11 +62,6 @@ def marker_hits_from(toks_lower: Column, markers: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks_lower, lambda t: F.array_contains(arr, t)))
 
 
-def marker_hits(text: Column, markers: tuple[str, ...]) -> Column:
-    """How many tokens of ``text`` are in the marker set."""
-    return marker_hits_from(tokens(F.lower(text)), markers)
-
-
 def lang_id_from(toks_lower: Column) -> Column:
     """Heuristic language ID from a pre-tokenized lowercase array: argmax of
     marker-word hit counts, 'und' when no marker hits. Deterministic
@@ -80,13 +75,6 @@ def lang_id_from(toks_lower: Column) -> Column:
         best_lang = F.when(take, F.lit(code)).otherwise(best_lang)
         best_hits = F.when(take, hits).otherwise(best_hits)
     return best_lang
-
-
-def lang_id(text: Column) -> Column:
-    """Heuristic language ID over raw text. When combining with other token
-    statistics, materialize ``tokens(F.lower(text))`` once in a projection
-    and use ``lang_id_from`` — tokenization dominates the cost."""
-    return lang_id_from(tokens(F.lower(text)))
 
 
 def quality_score_from(text: Column, toks_lower: Column) -> Column:
@@ -109,12 +97,6 @@ def quality_score_from(text: Column, toks_lower: Column) -> Column:
     return portable_round(
         0.25 * len_ok + 0.25 * mean_tok_ok + 0.3 * stop_capped + 0.2 * (1.0 - punct_ratio), 4
     )
-
-
-def quality_score(text: Column) -> Column:
-    """Quality heuristic over raw text (token counts are case-insensitive,
-    so lowercase tokens serve both the stopword and size terms)."""
-    return quality_score_from(text, tokens(F.lower(text)))
 
 
 def normalized_text(text: Column) -> Column:

@@ -43,7 +43,8 @@ from sql_query_engine_rs_spark.operators import (
     top_k,
 )
 from sql_query_engine_rs_spark.operators.window import per_group_top_k
-from sql_query_engine_rs_spark.streaming import windowed_counts
+from sql_query_engine_rs_spark.session import scoped_confs
+from sql_query_engine_rs_spark.streaming import STREAM_CONFS, drain_to_memory, windowed_counts
 
 
 @dataclass
@@ -72,30 +73,6 @@ def register(name: str, oracle: str | None):
 
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return parquet_scan(spark, f"{sf_dir}/{name}.parquet")
-
-
-def _set_confs(spark: SparkSession, confs: dict[str, str]) -> dict[str, str | None]:
-    """Set session confs, returning the prior values for ``_restore_confs``.
-
-    The streaming queries need runtime confs (nanosAsLong, UTC tz) only for
-    the duration of their eager drain; leaving them set would leak into
-    whatever query the session runs next."""
-    prior: dict[str, str | None] = {}
-    for k, v in confs.items():
-        try:
-            prior[k] = spark.conf.get(k)
-        except Exception:
-            prior[k] = None
-        spark.conf.set(k, v)
-    return prior
-
-
-def _restore_confs(spark: SparkSession, prior: dict[str, str | None]) -> None:
-    for k, v in prior.items():
-        if v is None:
-            spark.conf.unset(k)
-        else:
-            spark.conf.set(k, v)
 
 
 def _normalize_events_ts(df: DataFrame) -> DataFrame:
@@ -150,11 +127,6 @@ def pround(c, n: int = 2):
 
 def r2(c):  # rounded double aggregate, the cross-engine float convention
     return pround(c, 2)
-
-
-def rsql(expr: str, n: int = 2) -> str:
-    """SQL twin of ``pround`` for the DuckDB oracles."""
-    return f"FLOOR(({expr}) * {10 ** n} + 0.5) / {10 ** n}"
 
 
 # Bucket count for the two-level exact order-statistic pattern below.
@@ -4869,58 +4841,19 @@ def stream_windowed_counts(spark, sf_dir):
     the events parquet -> watermark -> tumbling window -> availableNow drain
     into a memory sink. Same result (and same oracle) as the batch twin
     ext_events_window — the unified batch/streaming contract, verified by
-    the driver itself.
-
-    Conf note: nanosAsLong is restored after the drain (the scan is done).
-    The result is materialized eagerly (localCheckpoint) while the UTC tz
-    is in effect, locking in the string rendering of the window timestamp,
-    and the memory-sink view is dropped so drained results don't accumulate
-    in driver memory across a long session."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        # FileStreamSource requires a DIRECTORY; expose the single parquet
-        # file through a temp dir symlink (zero copy).
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_stream_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
-        out = windowed_counts(stream, "1 hour", watermark="2 hours")
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # Materialize the drained result off the memory sink, then drop the
-        # sink view: in a long session each drain would otherwise stay
-        # pinned in driver memory under its stream_sink_<uuid> name. The
-        # eager localCheckpoint also locks in the UTC string rendering of
-        # the window timestamp while the scoped tz conf is still set.
-        result = (
-            spark.table(sink)
-            .select(
+    the driver itself."""
+    with scoped_confs(spark, STREAM_CONFS):
+        out = windowed_counts(_events_stream(spark, sf_dir), "1 hour", watermark="2 hours")
+        return drain_to_memory(
+            out,
+            "complete",
+            lambda d: d.select(
                 F.col("window_start").cast("string").alias("window_start"),
                 "event_type",
                 "n_events",
                 "sum_value",
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
 # =====================================================================
@@ -6438,68 +6371,35 @@ def stream_interval_join(spark, sf_dir):
     user + [ts, ts+10min], availableNow-drained to a memory sink. The
     time-range bound is what lets Spark expire join state — the property
     that keeps an always-on join's state finite. Same DuckDB oracle as the
-    batch twin (plain range-predicate self-join). Runtime confs are scoped
-    to the drain (output columns are longs/strings — nothing lazily
-    tz-dependent)."""
-    import uuid
+    batch twin (plain range-predicate self-join)."""
+    with scoped_confs(spark, STREAM_CONFS):
+        out = _click_purchase_lags(
+            _events_stream(spark, sf_dir), _events_stream(spark, sf_dir), "inner"
+        )
+        return drain_to_memory(out, "append")
 
+
+def _click_purchase_lags(clicks_src: DataFrame, purchases_src: DataFrame, how: str) -> DataFrame:
+    """Clicks joined to the same user's purchases within [ts, ts+10min] as
+    (click_id, purchase_id, user_id, lag_sec).
+
+    Both sides are projected to the join's inputs before the stream-stream
+    join: every buffered row sits in FOUR state stores per partition until
+    the watermark expires it, so unneeded columns (props, value,
+    event_type) would be paid per-row in state bytes and in the shuffle
+    feeding it (guide §2.3/§5)."""
     from sql_query_engine_rs_spark.streaming import interval_join
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # State partition count is sized to the stream, not the batch conf:
-        # each stateful-operator partition carries a state store (open +
-        # commit + checkpoint per micro-batch), a per-partition fixed cost
-        # that dwarfs row work on a bounded drain (32 -> 8 partitions halves
-        # wall time at sf0.1). An always-on deployment sizes this to key
-        # cardinality x arrival rate instead. Scoped: restored post-drain.
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_sj_")
-
-        def src():
-            return _normalize_events_ts(
-                spark.readStream.schema(static.schema).parquet(stream_dir)
-            )
-
-        # project to the join's inputs before the stream-stream join: every
-        # buffered row sits in FOUR state stores per partition until the
-        # watermark expires it, so unneeded columns (props, value,
-        # event_type) would be paid per-row in state bytes and in the
-        # shuffle feeding it (guide §2.3/§5)
-        clicks = (
-            src().filter(F.col("event_type") == "click")
-            .select("event_id", "user_id", "ts")
-        )
-        purchases = (
-            src().filter(F.col("event_type") == "purchase")
-            .select("event_id", "user_id", "ts")
-        )
-        joined = interval_join(clicks, purchases, key_col="user_id", upper="10 minutes")
-        out = joined.select(
-            F.col("l_event_id").alias("click_id"),
-            F.col("r_event_id").alias("purchase_id"),
-            "user_id",
-            (F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")).alias("lag_sec"),
-        )
-        sink = f"stream_sj_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+    cols = ("event_id", "user_id", "ts")
+    clicks = clicks_src.filter(F.col("event_type") == "click").select(*cols)
+    purchases = purchases_src.filter(F.col("event_type") == "purchase").select(*cols)
+    joined = interval_join(clicks, purchases, key_col="user_id", upper="10 minutes", how=how)
+    return joined.select(
+        F.col("l_event_id").alias("click_id"),
+        F.col("r_event_id").alias("purchase_id"),
+        "user_id",
+        (F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")).alias("lag_sec"),
+    )
 
 
 @register(
@@ -6514,44 +6414,15 @@ def stream_dedup(spark, sf_dir):
     the watermark passes them, unlike plain dropDuplicates whose state grows
     without bound. Single-batch execution is pinned (one source file,
     availableNow, no maxFilesPerTrigger — see _single_batch_stream_dir), so
-    the result equals batch DISTINCT, which is the oracle. Runtime confs are
-    scoped to the drain: the output holds no timestamp columns, so nothing
-    lazily depends on them afterward."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_dd_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    the result equals batch DISTINCT, which is the oracle."""
+    with scoped_confs(spark, STREAM_CONFS):
         deduped = (
-            stream.select("user_id", "event_type", "ts")
+            _events_stream(spark, sf_dir).select("user_id", "event_type", "ts")
             .withWatermark("ts", "1 hour")
             .dropDuplicatesWithinWatermark(["user_id", "event_type"])
             .select("user_id", "event_type")
         )
-        sink = f"stream_dd_{uuid.uuid4().hex[:8]}"
-        (
-            deduped.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return drain_to_memory(deduped, "append")
 
 
 @register(
@@ -6576,41 +6447,16 @@ def stream_event_transitions(spark, sf_dir):
     the always-on deployment maintains the corpus transition matrix
     incrementally with O(users) state instead of recomputing the window
     over all history each time."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import transition_counts_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_tr_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    with scoped_confs(spark, STREAM_CONFS):
+        return drain_to_memory(
+            transition_counts_stateful(_events_stream(spark, sf_dir)),
+            "update",
+            lambda d: d.groupBy("from_type", "to_type").agg(
+                F.sum("n").cast("bigint").alias("n")
+            ),
         )
-        deltas = transition_counts_stateful(stream)
-        sink = f"stream_tr_{uuid.uuid4().hex[:8]}"
-        (
-            deltas.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("from_type", "to_type")
-            .agg(F.sum("n").cast("bigint").alias("n"))
-        )
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -6646,44 +6492,17 @@ def stream_purchase_attribution(spark, sf_dir):
     per key), never re-running a window over history. Second-floor
     epoch diffs make the 1-hour lookback decision identical on the
     batch window, the streaming carry, and the DuckDB replay."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import last_touch_attribution_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_attr_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
-        deltas = last_touch_attribution_stateful(stream)
-        sink = f"stream_attr_{uuid.uuid4().hex[:8]}"
-        (
-            deltas.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("channel")
-            .agg(
+    with scoped_confs(spark, STREAM_CONFS):
+        return drain_to_memory(
+            last_touch_attribution_stateful(_events_stream(spark, sf_dir)),
+            "update",
+            lambda d: d.groupBy("channel").agg(
                 F.sum("n").cast("bigint").alias("n_purchases"),
                 pround(F.sum("value_sum"), 2).alias("attributed_value"),
-            )
+            ),
         )
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -6703,47 +6522,26 @@ def stream_custom_state(spark, sf_dir):
     result independent of how the source happens to split into
     micro-batches. The oracle is the batch twin: plain groupBy totals —
     the unified batch/streaming contract for custom state."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import running_totals_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_cs_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    with scoped_confs(spark, STREAM_CONFS):
+        totals = running_totals_stateful(
+            _events_stream(spark, sf_dir), key_col="user_id", value_col="value"
         )
-        totals = running_totals_stateful(stream, key_col="user_id", value_col="value")
-        sink = f"stream_cs_{uuid.uuid4().hex[:8]}"
-        (
-            totals.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
+        return drain_to_memory(totals, "update", _final_running_totals)
+
+
+def _final_running_totals(emitted: DataFrame) -> DataFrame:
+    """Per-key final state from the running-totals emissions: the emission
+    with the highest (monotone) running count."""
+    return (
+        emitted.groupBy("user_id")
+        .agg(
+            F.max("n_events").alias("n_events"),
+            F.max_by("total", "n_events").alias("_total"),
         )
-        final = (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max_by("total", "n_events").alias("_total"),
-            )
-            .select("user_id", "n_events", pround(F.col("_total"), 2).alias("total"))
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        .select("user_id", "n_events", pround(F.col("_total"), 2).alias("total"))
+    )
 
 
 @register(
@@ -6763,49 +6561,16 @@ def stream_custom_state_expiry(spark, sf_dir):
     groupBy oracle; actual cross-batch state REMOVAL is pinned by the
     multi-batch test in tests/test_streaming.py (a key going idle past the
     gap restarts from zero when it reappears)."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import running_totals_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_ce_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with scoped_confs(spark, STREAM_CONFS):
         totals = running_totals_stateful(
-            stream, key_col="user_id", value_col="value", idle_gap_minutes=120
+            _events_stream(spark, sf_dir),
+            key_col="user_id",
+            value_col="value",
+            idle_gap_minutes=120,
         )
-        sink = f"stream_ce_{uuid.uuid4().hex[:8]}"
-        (
-            totals.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("user_id")
-            .agg(
-                F.max("n_events").alias("n_events"),
-                F.max_by("total", "n_events").alias("_total"),
-            )
-            .select("user_id", "n_events", pround(F.col("_total"), 2).alias("total"))
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return drain_to_memory(totals, "update", _final_running_totals)
 
 
 @register(
@@ -6836,48 +6601,24 @@ def stream_session_windows(spark, sf_dir):
     seconds, sidestepping cross-engine timestamp rendering. Complements
     ext_sessionize (the batch lag/cumsum formulation over window
     functions) with the engine-managed stateful path."""
-    import uuid
-
     from sql_query_engine_rs_spark.streaming import session_windows
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        # state partitions sized to the bounded drain (see stream_interval_join)
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_sw_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
+    with scoped_confs(spark, STREAM_CONFS):
+        out = session_windows(_events_stream(spark, sf_dir), gap="30 minutes", watermark="2 hours")
+        return drain_to_memory(
+            out,
+            "complete",
+            lambda d: d.select(
+                F.col("session_start").cast("long").alias("session_start_es"),
+                F.col("session_end").cast("long").alias("session_end_es"),
+                "user_id",
+                "n_events",
+                "sum_value",
+            ),
         )
-        out = session_windows(stream, gap="30 minutes", watermark="2 hours")
-        sink = f"stream_sw_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = spark.table(sink).select(
-            F.col("session_start").cast("long").alias("session_start_es"),
-            F.col("session_end").cast("long").alias("session_end_es"),
-            "user_id",
-            "n_events",
-            "sum_value",
-        )
-        # materialize + drop the sink view (see stream_windowed_counts)
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
-def _sentineled_stream_dir(sf_dir: str, prefix: str) -> str:
+def _sentineled_stream_dir(sf_dir: str) -> str:
     """events.parquet as a stream dir PLUS a sentinel file holding one click
     and one purchase at max(ts) + 2 days (event_id −1/−2, user_id −1).
 
@@ -6898,7 +6639,7 @@ def _sentineled_stream_dir(sf_dir: str, prefix: str) -> str:
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    stream_dir = tempfile.mkdtemp(prefix=prefix)
+    stream_dir = tempfile.mkdtemp(prefix="events_oj_")
     src = os.path.abspath(f"{sf_dir}/events.parquet")
     os.symlink(src, os.path.join(stream_dir, "events.parquet"))
     tbl = pq.read_table(src)
@@ -6915,26 +6656,58 @@ def _sentineled_stream_dir(sf_dir: str, prefix: str) -> str:
     return stream_dir
 
 
-def _single_batch_stream_dir(sf_dir: str, prefix: str) -> str:
-    """Materialize events.parquet as a 1-file stream source directory.
+def _single_batch_stream_dir(sf_dir: str) -> str:
+    """Expose events.parquet as a 1-file stream source directory: a symlink
+    in a fresh temp dir (FileStreamSource requires a DIRECTORY; zero copy).
 
     The batch-DISTINCT oracle for ``stream_dedup`` holds ONLY when the whole
     source drains in one micro-batch: across batches the watermark advances
     and dropDuplicatesWithinWatermark may re-emit expired keys. One file +
     availableNow + no maxFilesPerTrigger pins single-batch execution; the
-    assertion makes the contract loud if the fixture ever changes.
+    check below makes the contract loud if events.parquet ever stops being
+    one parquet file (e.g. becomes a multi-part dataset directory).
     """
-    import glob
-    import os
     import tempfile
 
-    stream_dir = tempfile.mkdtemp(prefix=prefix)
-    link = os.path.join(stream_dir, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    n_files = len(glob.glob(os.path.join(stream_dir, "*.parquet")))
-    assert n_files == 1, f"single-batch stream contract broken: {n_files} files"
+    src = os.path.abspath(f"{sf_dir}/events.parquet")
+    if not os.path.isfile(src):
+        raise ValueError(f"single-batch stream contract broken: {src} is not one parquet file")
+    stream_dir = tempfile.mkdtemp(prefix="events_stream_")
+    os.symlink(src, os.path.join(stream_dir, "events.parquet"))
     return stream_dir
+
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events.parquet as a single-micro-batch stream (see
+    ``_single_batch_stream_dir``) with ``ts`` normalized like the batch
+    reads. Call inside ``scoped_confs(spark, STREAM_CONFS)``: the static
+    schema read needs nanosAsLong on the NANOS testdata generation."""
+    static = parquet_scan(spark, f"{sf_dir}/events.parquet")
+    stream_dir = _single_batch_stream_dir(sf_dir)
+    return _normalize_events_ts(spark.readStream.schema(static.schema).parquet(stream_dir))
+
+
+def _sharded_stream(spark: SparkSession, path: str) -> DataFrame:
+    """A parquet table split into THREE row-range files that drain one per
+    micro-batch (maxFilesPerTrigger=1), so an incremental sink must merge
+    across batch boundaries to equal the one-pass batch result."""
+    import tempfile
+
+    import pyarrow.parquet as pq_arrow
+
+    src_dir = tempfile.mkdtemp(prefix="stream_shards_")
+    tbl = pq_arrow.read_table(path)
+    step = (tbl.num_rows + 2) // 3
+    for i in range(3):
+        pq_arrow.write_table(
+            tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
+        )
+    static = parquet_scan(spark, path)
+    return (
+        spark.readStream.schema(static.schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
 
 
 @register(
@@ -9841,68 +9614,26 @@ def stream_outer_join(spark, sf_dir):
     (see _sentineled_stream_dir); Spark's no-data micro-batch then flushes
     every real row's outer result before availableNow terminates, giving
     EXACT batch-LEFT-JOIN parity under the full DuckDB hash oracle.
-    Sentinels (negative ids) are filtered from the output. State expiry and
-    partition sizing follow stream_interval_join."""
-    import uuid
-
-    from sql_query_engine_rs_spark.streaming import interval_join
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    Sentinels (negative ids) are filtered from the output. State expiry
+    follows stream_interval_join."""
+    with scoped_confs(spark, STREAM_CONFS):
         static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _sentineled_stream_dir(sf_dir, "events_oj_")
+        stream_dir = _sentineled_stream_dir(sf_dir)
 
         def src():
             return _normalize_events_ts(
                 spark.readStream.schema(static.schema).parquet(stream_dir)
             )
 
-        # project to the join's inputs before the stream-stream join (see
-        # stream_interval_join): state stores hold only (event_id, user_id,
-        # ts) per buffered row. The sentinel rows' negative event_ids
-        # survive the projection for the post-drain filter.
-        clicks = (
-            src().filter(F.col("event_type") == "click")
-            .select("event_id", "user_id", "ts")
-        )
-        purchases = (
-            src().filter(F.col("event_type") == "purchase")
-            .select("event_id", "user_id", "ts")
-        )
-        joined = interval_join(
-            clicks, purchases, key_col="user_id", upper="10 minutes", how="left_outer"
-        )
-        out = joined.select(
-            F.col("l_event_id").alias("click_id"),
-            F.col("r_event_id").alias("purchase_id"),
-            "user_id",
-            (F.unix_timestamp("r_ts") - F.unix_timestamp("l_ts")).alias("lag_sec"),
-        )
-        sink = f"stream_oj_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
+        # the sentinel rows' negative event_ids survive the join-input
+        # projection for the post-drain filter
+        out = _click_purchase_lags(src(), src(), "left_outer")
         # sentinel filter AFTER the drain: filtering l_event_id inside the
         # streaming plan pushes below the left watermark node, removes the
         # left sentinel pre-join, and the left watermark then stops at
         # real-max(ts) - 30min — leaving the last ~30min of clicks'
         # outer-ness undecided (measured: 1 row short at sf0.001)
-        result = (
-            spark.table(sink).filter(F.col("click_id") >= 0).localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return drain_to_memory(out, "append", lambda d: d.filter(F.col("click_id") >= 0))
 
 
 @register(
@@ -9922,43 +9653,21 @@ def stream_foreachbatch_upsert(spark, sf_dir):
     the incremental merge loses nothing across batch boundaries. This is
     the MERGE-into-serving-table pattern every always-on pipeline ends in;
     restart-no-reprocess is pinned separately (tests/test_streaming.py)."""
-    import os
     import tempfile
-
-    import pyarrow.parquet as pq_arrow
 
     from sql_query_engine_rs_spark.streaming import (
         _latest_upsert_version,
         foreach_batch_upsert,
     )
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
-        src_dir = tempfile.mkdtemp(prefix="events_fbu_src_")
+    with scoped_confs(spark, STREAM_CONFS):
         tgt_dir = tempfile.mkdtemp(prefix="events_fbu_tgt_")
-        tbl = pq_arrow.read_table(f"{sf_dir}/events.parquet")
-        step = (tbl.num_rows + 2) // 3
-        for i in range(3):
-            pq_arrow.write_table(
-                tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
-            )
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
+        stream = _sharded_stream(spark, f"{sf_dir}/events.parquet")
         foreach_batch_upsert(stream, tgt_dir, key_col="user_id", value_col="value")
         final = _latest_upsert_version(spark, tgt_dir)
         return final.select(
             "user_id", "n_events", r2(F.col("total")).alias("total")
         ).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -10656,39 +10365,20 @@ def stream_dedup_index_upsert(spark, sf_dir):
     incremental merge loses nothing across batch boundaries and is
     shard-order-independent. Restart-no-reprocess is pinned separately
     (tests/test_streaming.py)."""
-    import os
     import tempfile
-
-    import pyarrow.parquet as pq_arrow
 
     from sql_query_engine_rs_spark.streaming import (
         _latest_upsert_version,
         dedup_index_upsert,
     )
 
-    prior = _set_confs(spark, {"spark.sql.shuffle.partitions": "8"})
-    try:
-        src_dir = tempfile.mkdtemp(prefix="docs_ddx_src_")
+    with scoped_confs(spark, STREAM_CONFS):
         tgt_dir = tempfile.mkdtemp(prefix="docs_ddx_tgt_")
-        tbl = pq_arrow.read_table(f"{sf_dir}/documents.parquet")
-        step = (tbl.num_rows + 2) // 3
-        for i in range(3):
-            pq_arrow.write_table(
-                tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
-            )
-        static = parquet_scan(spark, f"{sf_dir}/documents.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-        )
-        dedup_index_upsert(stream, tgt_dir)
+        dedup_index_upsert(_sharded_stream(spark, f"{sf_dir}/documents.parquet"), tgt_dir)
         final = _latest_upsert_version(spark, tgt_dir)
         return final.select(
             "fingerprint", "first_doc_id", "n_seen"
         ).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)
 
 
 # =====================================================================
@@ -11337,19 +11027,8 @@ def stream_static_enrich(spark, sf_dir):
     bounded by the watermark), which is why enrich-then-aggregate scales to
     always-on 100 TB/day: per-batch cost is a broadcast hash join plus the
     windowed partial agg. Oracle = the identical batch join+rollup."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_enrich_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with scoped_confs(spark, STREAM_CONFS):
+        stream = _events_stream(spark, sf_dir)
         dim = t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
         enriched = stream.join(
             F.broadcast(dim), stream["user_id"] == dim["c_custkey"]
@@ -11369,29 +11048,16 @@ def stream_static_enrich(spark, sf_dir):
                 "sum_value",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = (
-            spark.table(sink)
-            .select(
+        return drain_to_memory(
+            out,
+            "complete",
+            lambda d: d.select(
                 F.col("window_start").cast("string").alias("window_start"),
                 "c_mktsegment",
                 "n_events",
                 "sum_value",
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -11418,22 +11084,11 @@ def stream_topk_per_window(spark, sf_dir):
     the snapshot idempotently, a crash-replayed batch converges to the same
     table. Rank state never enters the streaming state store — only the
     window counts do, bounded by the watermark."""
-    import os
     import tempfile
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_topk_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with scoped_confs(spark, STREAM_CONFS):
         agg = (
-            stream.withWatermark("ts", "2 hours")
+            _events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
             .groupBy(F.window(F.col("ts"), "1 hour").alias("win"), F.col("event_type"))
             .agg(F.count(F.lit(1)).alias("n_events"))
             .select(
@@ -11462,8 +11117,6 @@ def stream_topk_per_window(spark, sf_dir):
             .awaitTermination()
         )
         return parquet_scan(spark, tgt).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)
 
 
 def _md5_bucket4096_sql(expr: str) -> str:
@@ -12496,23 +12149,14 @@ def stream_blocklist_filter(spark, sf_dir):
     no join state store) — the same always-on economics as
     stream_static_enrich, with the anti side doing the policy work.
     Oracle = the batch WHERE-filtered rollup."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_block_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with scoped_confs(spark, STREAM_CONFS):
+        static = events_table(spark, sf_dir)
         blocklist = (
             static.select("user_id").distinct().filter(F.col("user_id") % 10 == 0)
         )
-        gated = stream.join(F.broadcast(blocklist), on="user_id", how="left_anti")
+        gated = _events_stream(spark, sf_dir).join(
+            F.broadcast(blocklist), on="user_id", how="left_anti"
+        )
         out = (
             gated.withWatermark("ts", "2 hours")
             .groupBy(F.window(F.col("ts"), "1 hour").alias("win"))
@@ -12526,17 +12170,7 @@ def stream_blocklist_filter(spark, sf_dir):
                 "_approx_users",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        drained = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
+        drained = drain_to_memory(out, "complete")
         # exact distinct users per window is a batch follow-up on the tiny
         # drained frame's windows (24*30 rows) joined to the gated batch twin
         # — the streaming side carries approx_count_distinct (HLL++, the
@@ -12547,9 +12181,7 @@ def stream_blocklist_filter(spark, sf_dir):
         # at exact counts of 9-16 on this data; rsd 5% governs large counts)
         # while still proving the streaming state is live and sane (the
         # oracle asserts TRUE).
-        gated_batch = _normalize_events_ts(static).join(
-            F.broadcast(blocklist), on="user_id", how="left_anti"
-        )
+        gated_batch = static.join(F.broadcast(blocklist), on="user_id", how="left_anti")
         exact_users = gated_batch.groupBy(
             F.date_trunc("hour", F.col("ts")).cast("string").alias("window_start")
         ).agg(F.countDistinct("user_id").alias("n_users"))
@@ -12566,8 +12198,6 @@ def stream_blocklist_filter(spark, sf_dir):
             )
             .localCheckpoint(eager=True)
         )
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -12723,21 +12353,9 @@ def stream_sliding_windows(spark, sf_dir):
     15-minute epoch grid (the WHERE clause keeps the event's containing
     windows — identical to window()'s assignment rule for aligned windows).
     """
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_slide_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with scoped_confs(spark, STREAM_CONFS):
         out = (
-            stream.withWatermark("ts", "2 hours")
+            _events_stream(spark, sf_dir).withWatermark("ts", "2 hours")
             .groupBy(
                 F.window(F.col("ts"), "1 hour", "15 minutes").alias("win"),
                 F.col("event_type"),
@@ -12753,20 +12371,7 @@ def stream_sliding_windows(spark, sf_dir):
                 "sum_value",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return drain_to_memory(out, "complete")
 
 
 @register(
@@ -15842,16 +15447,10 @@ def stream_ewma_monitor(spark, sf_dir):
     for ingest-rate monitoring at 100 TB: per-key state is O(1), emissions
     are per-batch deltas, and no history is ever re-scanned."""
     import tempfile
-    import uuid
 
     from sql_query_engine_rs_spark.streaming import ewma_stateful
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    with scoped_confs(spark, STREAM_CONFS):
         e = events_table(spark, sf_dir)
         hourly = e.groupBy(
             "event_type", F.date_trunc("hour", F.col("ts")).alias("hr")
@@ -15859,31 +15458,16 @@ def stream_ewma_monitor(spark, sf_dir):
         src_dir = tempfile.mkdtemp(prefix="ewma_stream_")
         hourly.coalesce(1).write.mode("overwrite").parquet(src_dir)
         stream = spark.readStream.schema(hourly.schema).parquet(src_dir)
-        out = ewma_stateful(stream)
-        sink = f"stream_ewma_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        final = (
-            spark.table(sink)
-            .groupBy("event_type")
-            .agg(
+        return drain_to_memory(
+            ewma_stateful(stream),
+            "update",
+            lambda d: d.groupBy("event_type").agg(
                 F.max("n_hours").cast("bigint").alias("n_hours"),
                 pround(F.max_by("ewma", "n_hours"), 4).alias("ewma"),
                 F.max_by("n_anomalies", "n_hours").cast("bigint").alias("n_anomalies"),
                 pround(F.max_by("max_dev", "n_hours"), 4).alias("max_dev"),
-            )
+            ),
         )
-        result = final.localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
 # =====================================================================
@@ -17053,17 +16637,11 @@ def stream_late_data_drop(spark, sf_dir):
     import os
     import tempfile
     import time
-    import uuid
 
     import pyarrow.compute as pc
     import pyarrow.parquet as pq_arrow
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    with scoped_confs(spark, STREAM_CONFS):
         tbl = pq_arrow.read_table(f"{sf_dir}/events.parquet")
         ts = tbl.column("ts")
         mn = pc.min(ts).as_py()
@@ -17102,30 +16680,16 @@ def stream_late_data_drop(spark, sf_dir):
             .option("maxFilesPerTrigger", "1")
             .parquet(src_dir)
         )
-        out = windowed_counts(stream, "1 hour", watermark="48 hours")
-        sink = f"stream_late_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = (
-            spark.table(sink)
-            .select(
+        return drain_to_memory(
+            windowed_counts(stream, "1 hour", watermark="48 hours"),
+            "append",
+            lambda d: d.select(
                 F.col("window_start").cast("string").alias("window_start"),
                 "event_type",
                 F.col("n_events").cast("bigint").alias("n_events"),
                 "sum_value",
-            )
-            .localCheckpoint(eager=True)
+            ),
         )
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
 
 
 @register(
@@ -19444,18 +19008,12 @@ def stream_min_watermark_union(spark, sf_dir):
     microsecond-offset watermark — no boundary ties."""
     import os
     import tempfile
-    import uuid
 
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq_arrow
 
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    try:
+    with scoped_confs(spark, STREAM_CONFS):
         tbl = pq_arrow.read_table(f"{sf_dir}/events.parquet")
         ts = tbl.column("ts")
         mn = pc.min(ts).as_py()
@@ -19493,20 +19051,7 @@ def stream_min_watermark_union(spark, sf_dir):
                 "sum_value",
             )
         )
-        sink = f"stream_wmu_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        result = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return result
-    finally:
-        _restore_confs(spark, prior)
+        return drain_to_memory(out, "append")
 
 
 @register(
@@ -21143,19 +20688,8 @@ def stream_variant_telemetry(spark, sf_dir):
 
     Reference: beyond scope — no streaming or semi-structured surface
     exists in the reference."""
-    import uuid
-
-    prior = _set_confs(spark, {
-        "spark.sql.legacy.parquet.nanosAsLong": "true",
-        "spark.sql.shuffle.partitions": "8",
-    })
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    try:
-        static = parquet_scan(spark, f"{sf_dir}/events.parquet")
-        stream_dir = _single_batch_stream_dir(sf_dir, "events_variant_")
-        stream = _normalize_events_ts(
-            spark.readStream.schema(static.schema).parquet(stream_dir)
-        )
+    with scoped_confs(spark, STREAM_CONFS):
+        stream = _events_stream(spark, sf_dir)
         v = F.parse_json("props")
         k = F.try_variant_get(v, "$.k", "int")
         out = (
@@ -21180,20 +20714,7 @@ def stream_variant_telemetry(spark, sf_dir):
                 "max_k",
             )
         )
-        sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
-        (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        drained = spark.table(sink).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(sink)
-        return drained
-    finally:
-        _restore_confs(spark, prior)
+        return drain_to_memory(out, "complete")
 
 
 # ---------------------------------------------------------------------------
@@ -21947,37 +21468,20 @@ def stream_url_dedup_upsert(spark, sf_dir):
     deliberately absent here: an exact distinct-raw-URL count is not
     mergeable without carrying the raw set per key; production indexes
     carry a sketch instead.)"""
-    import os
     import tempfile
-
-    import pyarrow.parquet as pq_arrow
 
     from sql_query_engine_rs_spark.streaming import (
         _latest_upsert_version,
         url_index_upsert,
     )
 
-    prior = _set_confs(spark, {"spark.sql.shuffle.partitions": "8"})
-    try:
-        src_dir = tempfile.mkdtemp(prefix="docs_url_src_")
+    with scoped_confs(spark, STREAM_CONFS):
         tgt_dir = tempfile.mkdtemp(prefix="docs_url_tgt_")
-        tbl = pq_arrow.read_table(f"{sf_dir}/documents.parquet")
-        step = (tbl.num_rows + 2) // 3
-        for i in range(3):
-            pq_arrow.write_table(
-                tbl.slice(i * step, step), os.path.join(src_dir, f"part{i}.parquet")
-            )
-        static = parquet_scan(spark, f"{sf_dir}/documents.parquet")
-        stream = (
-            spark.readStream.schema(static.schema)
-            .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
-            .withColumn("url", _raw_url_col())
+        stream = _sharded_stream(spark, f"{sf_dir}/documents.parquet").withColumn(
+            "url", _raw_url_col()
         )
         url_index_upsert(stream, tgt_dir)
         final = _latest_upsert_version(spark, tgt_dir)
         return final.select(
             "canonical_url", "keeper_doc_id", "n_docs"
         ).localCheckpoint(eager=True)
-    finally:
-        _restore_confs(spark, prior)

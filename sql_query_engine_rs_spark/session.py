@@ -20,6 +20,8 @@ chosen so the same code is correct on local[32] test runs and sane on a
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -89,3 +91,21 @@ def get_spark(
     if ckpt:
         spark.sparkContext.setCheckpointDir(ckpt)
     return spark
+
+
+@contextmanager
+def scoped_confs(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the body of a ``with`` block, then put every key
+    back: a prior value is re-set, a key that was unset is unset again, so
+    nothing leaks into whatever the session runs next."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

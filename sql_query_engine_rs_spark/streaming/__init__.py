@@ -9,14 +9,77 @@ event_type, value, props).
 Every transformation takes and returns DataFrames, so the SAME function works
 on a batch frame (tests, backfill) and a ``readStream`` frame (production) —
 the Spark unified-batch-streaming contract.
+
+The registry's ``stream_*`` entries run as bounded drains through one path:
+inside ``session.scoped_confs(spark, STREAM_CONFS)`` they build a stream
+(``queries._events_stream`` for the events table) and hand it to
+``drain_to_memory``, which drains it with ``availableNow`` into a memory
+sink, materializes the result and drops the sink. Entries that end in
+foreachBatch or a versioned parquet upsert share the conf scope but write
+their own sink.
 """
 
 from __future__ import annotations
+
+import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sql_query_engine_rs_spark.functions.expressions import portable_round
+
+# Session confs every bounded registry drain runs under, scoped with
+# ``session.scoped_confs`` so they are restored once the result is
+# materialized:
+# - nanosAsLong: older events generations store TIMESTAMP(NANOS), which the
+#   parquet reader only surfaces as a long (``queries._normalize_events_ts``
+#   rebuilds the timestamp);
+# - UTC: window timestamps render as strings the way DuckDB's naive reads do;
+# - 8 shuffle partitions: state partitions sized to the bounded drain. Each
+#   stateful-operator partition carries a state store (open + commit +
+#   checkpoint per micro-batch), a per-partition fixed cost that dwarfs row
+#   work on a bounded drain (32 -> 8 partitions halves wall time at sf0.1).
+#   An always-on deployment sizes this to key cardinality x arrival rate.
+STREAM_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.shuffle.partitions": "8",
+}
+
+
+def drain_to_memory(
+    df: DataFrame,
+    output_mode: str,
+    finish: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Drain a bounded stream into a memory sink and return the materialized
+    result.
+
+    The stream runs with ``availableNow`` to completion; ``finish`` (if given)
+    post-processes the drained rows as a batch frame. The eager
+    ``localCheckpoint`` runs while the caller's scoped confs are still set,
+    which locks in e.g. the UTC string rendering of window timestamps. The
+    sink view is dropped even on failure, so in a long session no drain stays
+    pinned in driver memory under its ``stream_sink_<uuid>`` name.
+    """
+    spark = df.sparkSession
+    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
+    try:
+        (
+            df.writeStream.format("memory")
+            .queryName(sink)
+            .outputMode(output_mode)
+            .trigger(availableNow=True)
+            .start()
+            .awaitTermination()
+        )
+        drained = spark.table(sink)
+        if finish is not None:
+            drained = finish(drained)
+        return drained.localCheckpoint(eager=True)
+    finally:
+        spark.catalog.dropTempView(sink)
 
 
 def windowed_counts(
@@ -83,22 +146,6 @@ def session_windows(
             "sum_value",
         )
     )
-
-
-def run_stream_once(stream_df: DataFrame, sink_table: str) -> None:
-    """Drain a stream into an in-memory sink with availableNow (test helper)."""
-    (
-        stream_df.writeStream.format("memory")
-        .queryName(sink_table)
-        .outputMode("complete" if _has_aggregation(stream_df) else "append")
-        .trigger(availableNow=True)
-        .start()
-        .awaitTermination()
-    )
-
-
-def _has_aggregation(df: DataFrame) -> bool:
-    return "Aggregate" in df._jdf.queryExecution().analyzed().toString()  # type: ignore[attr-defined]
 
 
 def running_totals_stateful(

@@ -868,3 +868,62 @@ def test_url_index_upsert_restart_no_reprocess(spark, tmp_path):
         "b.example.com/q": (12, 1),
         "c.example.com/r": (20, 1),
     }
+
+
+def test_drain_to_memory_cleans_up_when_finish_raises(spark, events_dir):
+    """A failing ``finish`` still drops the memory sink's temp view, and the
+    conf scope around the drain puts every STREAM_CONFS key back."""
+    from sql_query_engine_rs_spark.session import scoped_confs
+    from sql_query_engine_rs_spark.streaming import STREAM_CONFS, drain_to_memory
+
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    spark.conf.set(key, "7")  # a sentinel distinct from STREAM_CONFS' value
+    prior = {k: spark.conf.get(k, None) for k in STREAM_CONFS}
+    sinks: list[str] = []
+
+    def finish(drained):
+        sinks.extend(
+            t.name for t in spark.catalog.listTables() if t.name.startswith("stream_sink_")
+        )
+        raise RuntimeError("finish failed")
+
+    try:
+        with pytest.raises(RuntimeError, match="finish failed"):
+            with scoped_confs(spark, STREAM_CONFS):
+                drain_to_memory(read_stream(spark, events_dir), "append", finish)
+        assert len(sinks) == 1  # the sink view existed while finish ran
+        assert sinks[0] not in {t.name for t in spark.catalog.listTables()}
+        assert {k: spark.conf.get(k, None) for k in STREAM_CONFS} == prior
+    finally:
+        spark.conf.set(key, original)
+
+
+def test_stream_entry_restores_confs_and_drops_sink(spark, sf_dir):
+    """A registry stream entry leaves the session as it found it: the
+    shuffle-partition count it scopes is restored and no sink view stays."""
+    from sql_query_engine_rs_spark.queries import QUERIES
+
+    key = "spark.sql.shuffle.partitions"
+    original = spark.conf.get(key)
+    spark.conf.set(key, "5")  # a sentinel distinct from STREAM_CONFS' value
+    try:
+        views = {t.name for t in spark.catalog.listTables()}
+        out = QUERIES["stream_dedup"].build(spark, sf_dir)
+        assert out.count() > 0
+        assert spark.conf.get(key) == "5"
+        after = {t.name for t in spark.catalog.listTables()}
+        assert after == views
+        assert not any(name.startswith("stream_sink_") for name in after)
+    finally:
+        spark.conf.set(key, original)
+
+
+def test_single_batch_stream_dir_rejects_a_multi_file_source(tmp_path):
+    """The single-micro-batch contract is checked, not assumed: an
+    events.parquet that is a dataset directory is refused up front."""
+    from sql_query_engine_rs_spark.queries import _single_batch_stream_dir
+
+    (tmp_path / "events.parquet").mkdir()
+    with pytest.raises(ValueError, match="not one parquet file"):
+        _single_batch_stream_dir(str(tmp_path))
