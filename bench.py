@@ -18,7 +18,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from sql_query_engine_rs_spark.queries import QUERIES  # noqa: E402
+from sql_query_engine_rs_spark.queries import QUERIES, _latest_driver_round  # noqa: E402
 from sql_query_engine_rs_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -28,9 +28,10 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 HEADLINE_SF = 0.1
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
-# Headline set: every operator family, weighted toward the scan/agg/join
-# paths that dominate at scale.
-BENCH_QUERIES = [
+# Legacy headline set: every operator family, weighted toward the
+# scan/agg/join paths that dominate at scale. Frozen in this order so
+# "value" and the other pre-r13 line fields stay comparable across rounds.
+LEGACY_BENCH_QUERIES = [
     "v0_filter_comparison",
     "v0_simple_agg",
     "v0_hash_agg_multi",
@@ -323,128 +324,12 @@ BENCH_QUERIES = [
     "pipe_zorder_range_layout",
 ]
 
-# Round-13 re-baseline (r12 VERDICT item 5): the remaining 107 registry
-# entries — the whole r11 crawl-curation wave, the incremental dedup/minhash
-# probes, and the cheap v0/ext surface — previously had NO perf tracking.
-# They are ADDED (never removing/renaming a legacy entry); every
-# pre-existing field of the one-line JSON ("value", "queries", "median",
-# "max", "cold_value", "n_queries") keeps the legacy-256 population so
-# round-over-round comparison survives, and the full-set totals ride new
-# additive fields ("value_full", "n_queries_full"). pipe_curation_funnel
-# (the ~11 s composite the legacy list deliberately excluded) is in the
-# FULL population only, so it cannot distort the comparable legacy total.
-FULL_BENCH_ADDITIONS = [
-    "v0_scan",
-    "v0_projection",
-    "v0_filter_equality",
-    "v0_project_arithmetic",
-    "v0_hash_agg",
-    "v0_agg_null_semantics",
-    "v0_type_cast",
-    "v0_select_constant",
-    "ext_avg_count_distinct",
-    "ext_distinct",
-    "ext_join_fact",
-    "ext_having",
-    "ext_subquery_in",
-    "ext_scalar_subquery",
-    "ext_union",
-    "ext_intersect",
-    "ext_except",
-    "ext_window_running",
-    "ext_rollup",
-    "ext_case_when",
-    "ext_string_funcs",
-    "ext_date_funcs",
-    "ext_json_extract",
-    "ext_anti_join",
-    "ext_semi_exists",
-    "ext_cube",
-    "ext_pivot",
-    "ext_percentiles",
-    "ext_array_agg",
-    "ext_asof_join_forward",
-    "ext_range_join",
-    "ext_window_first_last",
-    "ext_qualify",
-    "ext_distinct_on",
-    "ext_regexp_extract",
-    "ext_null_funcs",
-    "ext_levenshtein",
-    "ext_window_battery",
-    "ext_argmax_agg",
-    "ext_date_arithmetic",
-    "ext_unpivot",
-    "ext_scd2_merge",
-    "ext_correlated_subquery",
-    "ext_cross_join",
-    "ext_stats_agg",
-    "ext_regr_agg",
-    "ext_median_mode",
-    "ext_lateral_join",
-    "ext_bool_string_agg",
-    "ext_window_frames",
-    "ext_array_funcs",
-    "ext_resample_gapfill",
-    "ext_full_outer_join",
-    "ext_approx_distinct",
-    "ext_null_safe_join",
-    "ext_filtered_agg",
-    "ext_map_struct_funcs",
-    "ext_bitwise_agg",
-    "ext_try_arith",
-    "ext_explode_outer",
-    "ext_asof_join_nearest",
-    "ext_window_count_distinct",
-    "ext_tpch_q2",
-    "ext_tpch_q4",
-    "ext_tpch_q9",
-    "ext_tpch_q10",
-    "ext_tpch_q11",
-    "ext_tpch_q12",
-    "ext_tpch_q14",
-    "ext_tpch_q15",
-    "ext_tpch_q16",
-    "ext_tpch_q17",
-    "ext_tpch_q19",
-    "ext_tpch_q20",
-    "ext_tpch_q21",
-    "ext_tpch_q22",
-    "pipe_dedup_groups",
-    "pipe_ngram_jaccard",
-    "pipe_ann_lsh",
-    "pipe_lang_id",
-    "pipe_quality_score",
-    "pipe_text_stats",
-    "pipe_multimodal_features",
-    "pipe_hash_sample",
-    "pipe_repetition_score",
-    "pipe_embedding_dedup_lsh",
-    "pipe_char_shingle_sketch",
-    "pipe_dedup_keeplist",
-    "pipe_ann_ivf_bucketed",
-    "pipe_pii_scrub",
-    "pipe_chunk_documents",
-    "pipe_audio_features",
-    "pipe_table_profile",
-    "pipe_bigram_logprob",
-    "pipe_vocab_coverage",
-    "pipe_winnow_dups",
-    "pipe_domain_cap",
-    "pipe_weighted_sample",
-    "pipe_chunk_dedup_ratio",
-    "pipe_curation_funnel",
-    "pipe_incremental_dedup",
-    "pipe_url_dedup",
-    "pipe_decontam_diff",
-    "pipe_incremental_minhash",
-    "stream_windowed_counts",
-    "stream_dedup",
-    "stream_url_dedup_upsert",
-]
-
-LEGACY_BENCH_QUERIES = BENCH_QUERIES
-BENCH_QUERIES = LEGACY_BENCH_QUERIES + FULL_BENCH_ADDITIONS
+# The full bench set is the legacy list, then every other registry entry in
+# registry order; its totals ride the additive "value_full" and
+# "n_queries_full" fields. pipe_curation_funnel (an ~11 s composite the
+# legacy list deliberately excludes) is therefore in the full set only.
+_LEGACY = set(LEGACY_BENCH_QUERIES)
+BENCH_QUERIES = LEGACY_BENCH_QUERIES + [n for n in QUERIES if n not in _LEGACY]
 
 
 def _read_trials() -> int:
@@ -577,8 +462,9 @@ def _latest_committed_query_map() -> dict[str, float]:
             continue
         # A map taken at a different core count (the driver also runs the
         # bench at low CPUS to measure scaling) is not a valid burst/noise
-        # reference for this run; skip it when the stamp records its cpus.
-        if "cpus" in data and str(data["cpus"]) != str(CPUS):
+        # reference for this run; neither is a map with no cpus stamp
+        # (r09-r12), whose core count is unknown.
+        if str(data.get("cpus")) != str(CPUS):
             continue
         q = data.get("queries")
         if isinstance(q, dict) and int(stem) >= best[0]:
@@ -688,11 +574,10 @@ def main() -> None:
         raw_times[n] / ref[n] for n in raw_times if ref.get(n) and ref[n] > 0
     )
     noise_ratio_median = round(ratios[len(ratios) // 2], 3) if ratios else None
-    legacy = set(LEGACY_BENCH_QUERIES)
     wash_meta = {
         "total_raw": round(sum(raw_times.values()), 3),
         "total_raw_legacy": round(
-            sum(v for n, v in raw_times.items() if n in legacy), 3
+            sum(v for n, v in raw_times.items() if n in _LEGACY), 3
         ),
         "total_washed": round(sum(times.values()), 3),
         "retried": sorted(retried),
@@ -733,12 +618,7 @@ def main() -> None:
     # (SPARK_GRAFT_SF_DIR override) would overwrite it at a different
     # scale — either way round-over-round diffs silently break.
     if bench_queries == BENCH_QUERIES and float(sf) == HEADLINE_SF:
-        rounds = [
-            int(os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")])
-            for p in glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))
-            if os.path.basename(p)[len("CORRECTNESS_r"):-len(".json")].isdigit()
-        ]
-        stamp = max(rounds, default=0) + 1
+        stamp = _latest_driver_round() + 1
         with open(os.path.join(here, f"BENCH_QUERIES_r{stamp:02d}.json"), "w") as f:
             json.dump(
                 {"sf": float(sf), "unit": "sec", "queries": times, "cold": cold, **wash_meta},
@@ -766,9 +646,8 @@ def summary_line(times, cold, sf, retried=0, wash_meta=None):
     (this run's median per-query ratio vs the last committed same-cpus map;
     ~1.0 on a quiet box) let the driver wash its own round-over-round
     comparison (r12 VERDICT item 1)."""
-    legacy = set(LEGACY_BENCH_QUERIES)
-    ltimes = {n: v for n, v in times.items() if n in legacy}
-    lcold = {n: v for n, v in cold.items() if n in legacy}
+    ltimes = {n: v for n, v in times.items() if n in _LEGACY}
+    lcold = {n: v for n, v in cold.items() if n in _LEGACY}
     sorted_times = sorted(ltimes.values())
     slowest = dict(sorted(ltimes.items(), key=lambda kv: -kv[1])[:5])
     n = len(sorted_times)
@@ -788,6 +667,7 @@ def summary_line(times, cold, sf, retried=0, wash_meta=None):
         "n_queries_full": len(times),
         "total_raw": wash_meta.get("total_raw_legacy"),
         "noise_ratio_median": wash_meta.get("noise_ratio_median"),
+        "cpus": int(CPUS),
         "note": f"min-of-warm steady total over the {n} legacy queries (comparable round-over-round); value_full/n_queries_full cover the full {len(times)}-entry registry benched since r13; queries shows the legacy 5 slowest; full per-query map in bench_queries.json, raw {TRIALS}-trial arrays in bench_trials.json; fresh session every {COHORT_SIZE} queries; retried = cohort-burst outliers re-measured fresh-session (min kept); total_raw = pre-retry legacy sum; noise_ratio_median = this run vs last committed same-cpus map (~1.0 = quiet box)",
     }
 

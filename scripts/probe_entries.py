@@ -4,33 +4,29 @@ Usage: python scripts/probe_entries.py name1,name2[,...] [sf0.001 sf0.01]
 
 For each named registry entry, builds the query with a VANILLA SparkSession
 (no engine confs — the grading driver's seam) at each scale factor and
-compares the collected rows against the DuckDB oracle, row-sorted and
-stringified exactly like the driver does. Exits non-zero on any mismatch.
+checks it against the DuckDB oracle with ``window_sim.compare`` (rows,
+schema and canonicalized values). Exits non-zero on any mismatch.
 """
 from __future__ import annotations
 
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+# window_sim puts the repo root on sys.path
+from window_sim import compare, oracle_connection  # noqa: E402
+
+from sql_query_engine_rs_spark.queries import QUERIES  # noqa: E402
 
 
 def main() -> int:
     names = [n.strip() for n in sys.argv[1].split(",") if n.strip()]
     sfs = sys.argv[2:] or ["sf0.001", "sf0.01"]
 
-    import duckdb
     from pyspark.sql import SparkSession
 
-    import __spark_entry__ as m
-
-    qs, osql = m.queries(), m.oracle_sql()
-    unknown = [n for n in names if n not in qs]
+    unknown = [n for n in names if n not in QUERIES]
     if unknown:
         print(f"unknown entries: {unknown}")
         return 2
@@ -42,31 +38,13 @@ def main() -> int:
     bad = []
     for sf in sfs:
         sf_dir = f"/root/testdata/{sf}"
-        con = duckdb.connect()
-        for t in TABLES:
-            con.execute(
-                f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
-            )
+        con = oracle_connection(sf_dir)
         for name in names:
-            try:
-                srows = sorted(
-                    tuple(str(x) for x in r)
-                    for r in qs[name](spark, sf_dir).collect()
-                )
-                drows = sorted(
-                    tuple(str(x) for x in r)
-                    for r in con.execute(osql[name]).fetchall()
-                )
-                ok = srows == drows
-            except Exception as e:  # noqa: BLE001 — report, don't crash the sweep
-                ok, srows, drows = False, [("ERR", repr(e))], []
-            print(f"{sf} {name}: {'OK' if ok else 'MISMATCH'} ({len(srows)} rows)")
-            if not ok:
+            why = compare(spark, con, name, sf_dir)
+            print(f"{sf} {name}: {'OK' if why is None else 'MISMATCH'}")
+            if why is not None:
+                print(f"  {why}")
                 bad.append((sf, name))
-                for r in srows[:3]:
-                    print("  spark:", r)
-                for r in drows[:3]:
-                    print("  duck :", r)
         con.close()
     spark.stop()
     print("DONE bad:", bad)

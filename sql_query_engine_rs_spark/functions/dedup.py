@@ -214,7 +214,13 @@ def ngram_jaccard_pairs(
     no n-gram evidence; all-pairs of empty docs would otherwise emit a
     spurious O(N^2) clique of trivial 'duplicates').
     Output: (id_a, id_b, jaccard_sim), id_a < id_b.
+    Raises ValueError when ``size_blocking`` is set and threshold < 0.6.
     """
+    if size_blocking and threshold < 0.6:
+        # the sparse path below is proven output-identical only for t >= 0.6
+        raise ValueError(
+            f"size_blocking=True needs threshold >= 0.6, got {threshold}"
+        )
     # tokens in their own projection (see shingles_from_tokens), shingles
     # persisted once for both join sides, and the empty-set filter applied
     # AFTER the eager cache so Catalyst can't push it (and the shingle
@@ -248,8 +254,7 @@ def ngram_jaccard_pairs(
         # size ratio <= 1/0.59995 < 2, so both docs sit in equal-or-
         # adjacent buckets — the blocking never excluded a qualifying pair.
         # (At t near 0.5 the rounded filter admits ratios marginally above
-        # 2 that the bucket test could exclude, hence the guard.)
-        assert threshold >= 0.6, "sparse jaccard path proven only for t >= 0.6"
+        # 2 that the bucket test could exclude, hence the guard at the top.)
         e = shingled.select(
             F.col("_id"), F.size("_grams").alias("_n"), F.explode("_grams").alias("_g")
         )

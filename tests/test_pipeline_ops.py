@@ -1933,6 +1933,14 @@ def test_ngram_jaccard_sparse_equals_blocked_join(spark):
     assert got == ref and any(r[:2] == (0, 1) for r in got), (got, ref)
 
 
+def test_ngram_jaccard_size_blocking_rejects_low_threshold(spark):
+    """The sparse size-blocked path is proven only for t >= 0.6; a lower
+    threshold is refused with an exception that survives python -O."""
+    df = spark.createDataFrame([(0, "a b c d")], "doc_id long, text string")
+    with pytest.raises(ValueError, match="threshold >= 0.6"):
+        D.ngram_jaccard_pairs(df, threshold=0.5, size_blocking=True)
+
+
 def test_winnow_dups_barriers_and_planted_pair(spark, tmp_path):
     """pipe_winnow_dups' two materialization barriers (r13) must hold —
     the returned plan reads ExistingRDD scans, never re-deriving the gram

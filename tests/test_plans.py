@@ -648,6 +648,8 @@ def test_bench_stdout_line_stays_driver_safe():
     assert parsed["n_queries"] == len(bench.LEGACY_BENCH_QUERIES)
     assert parsed["n_queries_full"] == len(bench.BENCH_QUERIES)
     assert parsed["value_full"] > parsed["value"]
+    # the core count rides the line so runs compare only at equal cpus
+    assert parsed["cpus"] == int(bench.CPUS)
 
 
 def test_knn_graph_candidates_never_exchange_vectors(spark, sf_dir):
@@ -1059,13 +1061,17 @@ def test_bench_burst_suspects_selection():
     assert len(bench._burst_suspects(many, {k: 1.0 for k in many}, cap=16)) == 16
 
 
-def test_bench_latest_committed_map_reads_newest_round():
+def test_bench_latest_committed_map_reads_newest_round(monkeypatch):
+    """Only a map stamped with this run's cpus is a noise reference:
+    r13 is stamped 32, r14 is stamped 8, and r09-r12 carry no stamp."""
     import bench
 
+    monkeypatch.setattr(bench, "CPUS", "32")
     m = bench._latest_committed_query_map()
-    assert m and all(isinstance(v, float) for v in m.values())
-    # the committed r10 stamp is the newest on this tree
+    assert len(m) == 363 and all(isinstance(v, float) for v in m.values())
     assert "pipe_basket_lift" in m
+    monkeypatch.setattr(bench, "CPUS", "4")
+    assert bench._latest_committed_query_map() == {}
 
 
 def _ancestors_to_root(plan: str, needle: str) -> list[str]:

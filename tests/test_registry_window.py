@@ -1,16 +1,13 @@
 """The driver verifies only the first 50 ``queries()`` entries per round, so
 ordering IS the correctness-coverage budget.  These pins keep the window
-self-staging: slots go to entries without a green CORRECTNESS row, green
-entries fall to the tail, and deliberate re-rows stay explicit."""
+self-staging: slots go to entries without a green CORRECTNESS row, and
+green entries fall to the tail."""
 
 from __future__ import annotations
 
 from sql_query_engine_rs_spark.queries import (
-    _FORCE_REROW_SCHEDULE,
     _WINDOW_SIZE,
-    _active_force_rerow,
     _driver_green_names,
-    _latest_driver_round,
     _ordered_names,
     QUERIES,
 )
@@ -20,9 +17,9 @@ def _assert_window_invariants():
     """The era-invariant window contract (r10 verdict item 1).
 
     While unchecked entries remain, no window slot may go to an
-    already-green entry outside the force-rerow list.  Once the registry
-    is fully driver-green (residue zero), the leftover slots pad with
-    green entries STALEST-FIRST — asserted as a property of the per-entry
+    already-green entry.  Once the registry is fully driver-green
+    (residue zero), the leftover slots pad with green entries
+    STALEST-FIRST — asserted as a property of the per-entry
     latest-green-round map (not against a static cohort list, which went
     stale at grading time two rounds running: every new CORRECTNESS file
     re-greens entries and reshuffles the true staleness order)."""
@@ -31,17 +28,16 @@ def _assert_window_invariants():
     rounds = _green_rounds()
     green = set(rounds)
     window = _ordered_names()[:_WINDOW_SIZE]
-    pins = set(_active_force_rerow())
-    residue = [n for n in QUERIES if n not in green and n not in pins]
+    residue = [n for n in QUERIES if n not in green]
     outside_unchecked = [n for n in residue if n not in set(window)]
     if outside_unchecked:
-        # an unchecked entry was displaced: no green non-pin may hold a slot
-        wasted = [n for n in window if n in green and n not in pins]
+        # an unchecked entry was displaced: no green entry may hold a slot
+        wasted = [n for n in window if n in green]
         assert not wasted, f"green entries occupying window slots: {wasted}"
         return
     # every unchecked entry is in the window; leftover slots pad with GREEN
     # entries stalest-first
-    pad = [n for n in window if n not in pins and n in green]
+    pad = [n for n in window if n in green]
     # 1. pad entries are green (residue zero => everything is) and sorted
     #    stalest-first within the pad itself;
     pad_rounds = [rounds[n] for n in pad if n in rounds]
@@ -96,38 +92,8 @@ def test_window_is_full_while_unchecked_entries_remain():
     green = _driver_green_names()
     unchecked = [n for n in QUERIES if n not in green]
     window = _ordered_names()[:_WINDOW_SIZE]
-    expected = min(_WINDOW_SIZE, len(unchecked) + len(_active_force_rerow()))
+    expected = min(_WINDOW_SIZE, len(unchecked))
     assert len(window) >= expected
-
-
-def test_force_rerow_activates_only_the_next_scheduled_round():
-    """A round's pins occupy slots only while that round is the next one
-    the driver will verify: later rounds' pins must not consume earlier
-    slots, and verified rounds' pins must expire."""
-    latest = _latest_driver_round()
-    pending = [r for r in _FORCE_REROW_SCHEDULE if r > latest]
-    if pending:
-        assert _active_force_rerow() == _FORCE_REROW_SCHEDULE[min(pending)]
-    else:
-        assert _active_force_rerow() == []
-
-
-def test_force_rerow_schedule_names_exist():
-    for rnd, names in _FORCE_REROW_SCHEDULE.items():
-        missing = [n for n in names if n not in QUERIES]
-        assert not missing, f"round {rnd} pins not in registry: {missing}"
-
-
-def test_round9_window_fits_residue_plus_pins():
-    """Round 9 must drain the full no-driver-row residue: the 9 re-row
-    pins may not push any never-checked entry out of the 50-slot window."""
-    green = _driver_green_names()
-    window8 = set(_ordered_names()[:_WINDOW_SIZE])
-    residue = [n for n in QUERIES if n not in green and n not in window8]
-    assert len(residue) + len(_FORCE_REROW_SCHEDULE[9]) <= _WINDOW_SIZE, (
-        f"{len(residue)} residue + {len(_FORCE_REROW_SCHEDULE[9])} pins "
-        f"exceed the {_WINDOW_SIZE}-slot window"
-    )
 
 
 def test_ordering_is_a_permutation_of_the_registry():
